@@ -815,37 +815,63 @@ object Curation {
     curated
   }
 
-  /** Stage 1: language + repetition gate, then PII redaction.
-    * Output: (idCol, lang, _paras) — redacted text as a paragraph array.
+  /** The rows of `df` that pass the quality gate — language identified
+    * (not "und"), at least `minTokens` tokens, duplicate-line fraction
+    * at most `maxDupLinePpm` — with their `lang` appended. The one gate
+    * form shared by the batch stage ([[gateStage]], hence `curate`,
+    * `curateStaged` and q43) and the streaming ingest.
     *
-    * The scan is the per-doc hot loop of the whole curation chain, so
-    * every text-derived array is materialized exactly once per row:
-    * the token array feeds both the langId vote (withLangId) and the
-    * token floor; the line array feeds the duplicate-line ceiling.
-    * (The naive form — langId(txt) + tokenCount(txt) + repetition
+    * Each text-derived array is materialized once per row: the token
+    * array feeds both the langId vote ([[TextAnalysis.withLangId]]) and
+    * the token floor; the line array feeds the duplicate-line ceiling.
+    * That holds only while the signals are read by projections. A plain
+    * Filter over them is pushed below those projections by
+    * `PushPredicateThroughNonJoin`, which substitutes each alias with
+    * its defining expression — the scan-side Filter then re-runs the
+    * tokenizer, the line split and all nine script counts, and the
+    * projection above runs them again. So the three signals leave
+    * through a one-row `inline(array(struct(...)))` Generate and the
+    * predicate filters above it: a Filter over generator output cannot
+    * be pushed through the Generate, and the Generate adds no exchange,
+    * job or stage.
+    */
+  private[graft] def gateRows(df: DataFrame, textCol: String,
+      minTokens: Int, maxDupLinePpm: Long): DataFrame = {
+    val txt = col(textCol)
+    val signals = struct(col("_glang").as("lang"),
+      size(col("_gtoks")).cast("long").as("_toks"),
+      dupLinePpm(col("_glines")).as("_dlp"))
+    // an input `lang` column is replaced by the identified one
+    TextAnalysis.withLangId(
+        df.drop("lang").withColumn("_gtoks", Dedup.tokens(txt))
+          .withColumn("_glines", docLines(txt)),
+        textCol, "_glang", toksCol = "_gtoks")
+      .select(col("*"), inline(array(signals)))
+      .filter(col("lang") =!= "und" && col("_toks") >= minTokens &&
+        col("_dlp") <= maxDupLinePpm)
+      .drop("_gtoks", "_glines", "_glang", "_toks", "_dlp")
+  }
+
+  /** Stage 1: language + repetition gate ([[gateRows]]), then PII
+    * redaction. Output: (idCol, lang, _paras) — redacted text as a
+    * paragraph array.
+    *
+    * The scan is the per-doc hot loop of the whole curation chain.
+    * (The naive gate — langId(txt) + tokenCount(txt) + repetition
     * features as inline Columns — re-tokenizes the text 14+ times per
     * row through the decision tree's repeated references; measured 2.4×
     * slower on the sf0.1 curation input.)
     */
   private[graft] def gateStage(df: DataFrame, idCol: String,
       textCol: String, minTokens: Int, maxDupLinePpm: Long): DataFrame = {
-    val txt = col(textCol)
-    val withFeats = TextAnalysis.withLangId(
-      df.withColumn("_gtoks", Dedup.tokens(txt))
-        .withColumn("_glines", docLines(txt)),
-      textCol, "lang", toksCol = "_gtoks")
-    withFeats
-      .withColumn("_toks", size(col("_gtoks")).cast("long"))
-      .withColumn("_dlp", dupLinePpm(col("_glines")))
-      .filter(col("lang") =!= "und" && col("_toks") >= minTokens &&
-        col("_dlp") <= maxDupLinePpm)
+    gateRows(df, textCol, minTokens, maxDupLinePpm)
       // emit the redacted text ALREADY paragraph-split: the next stage
       // (corpus paragraph dedup) reads its input twice, and an
       // unmaterialized split would run twice — checkpointing the array
       // makes both reads an attribute fetch (same bytes stored either
       // way; the join string is fixed, so no information is lost)
       .select(col(idCol), col("lang"),
-        paragraphs(piiRedact(txt)).as("_paras"))
+        paragraphs(piiRedact(col(textCol))).as("_paras"))
   }
 
   /** Stage 2: corpus-level boilerplate-paragraph removal.

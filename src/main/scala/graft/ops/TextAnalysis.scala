@@ -209,11 +209,15 @@ object TextAnalysis {
   /** DataFrame-level langId — identical values to [[langId]], but each
     * input feature (the tokenization, the 12 stopword-hit counts, the 9
     * script counts) is materialized as its own column in an inner
-    * projection, so it is computed exactly once per row no matter how
-    * many times the decision tree references it (CollapseProject keeps
-    * multi-referenced non-cheap aliases — the same trick as the minhash
-    * `_units` column). Script counts use `regexp_extract_all` size
-    * (match counting) instead of the replace-and-subtract form: same
+    * projection, so projections above compute it once per row no
+    * matter how many times the decision tree references it
+    * (CollapseProject keeps multi-referenced non-cheap aliases — the
+    * same trick as the minhash `_units` column). A Filter over `out` or
+    * these features does NOT share them: predicate pushdown substitutes
+    * the aliases into the Filter below the projections, re-running every
+    * kernel there. Filter through a Generate fence instead, as
+    * [[Curation.gateRows]] does. Script counts use `regexp_extract_all`
+    * size (match counting) instead of the replace-and-subtract form: same
     * value for single-char classes, but no full-text copy per script.
     * This is the form the corpus-curation gate runs: measured ~3× the
     * inline form's throughput on the sf0.1 curation input.

@@ -164,19 +164,9 @@ object StreamingPipeline {
       tsCol: String = "ts", minTokens: Int = 10,
       maxDupLinePpm: Long = 300000L,
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    import graft.ops.{Curation, Dedup, TextAnalysis}
-    val txt = col(textCol)
-    // same materialize-once scan shape as the batch gateStage
-    val gated = TextAnalysis.withLangId(
-        docs.withColumn("_gtoks", Dedup.tokens(txt))
-          .withColumn("_glines", Curation.docLines(txt)),
-        textCol, "lang", toksCol = "_gtoks")
-      .withColumn("_toks", size(col("_gtoks")).cast("long"))
-      .withColumn("_dlp", Curation.dupLinePpm(col("_glines")))
-      .filter(col("lang") =!= "und" && col("_toks") >= minTokens &&
-        col("_dlp") <= maxDupLinePpm)
-      .withColumn("red_text", Curation.piiRedact(txt))
-      .drop("_gtoks", "_glines")
+    import graft.ops.Curation
+    val gated = Curation.gateRows(docs, textCol, minTokens, maxDupLinePpm)
+      .withColumn("red_text", Curation.piiRedact(col(textCol)))
     dedupStream(gated, tsCol, "red_text", watermarkDelay)
       .select(col(idCol), col(tsCol), col("lang"), col("red_text"))
   }

@@ -1127,6 +1127,27 @@ class OpsSpec extends AnyFunSuite {
       "boilerplate paragraph (6 docs) must be stripped")
   }
 
+  test("curation gate: one doc dropped per reason, PII redacted in the kept") {
+    import spark.implicits._
+    val kept = Seq("the report is in the attached file",
+      "mail a.b@example.com or call +1 555 123 4567",
+      "the server at 10.0.0.1 is down").mkString("\n\n")
+    val df = Seq(
+      (1L, "xqz qrp zzz vvv qqq www eee rrr"), // no stop-word hits: und
+      (2L, "the cat is here"), // 4 tokens < minTokens
+      (3L, Seq.fill(6)("the offer is here").mkString("\n")), // dup lines
+      (4L, kept)
+    ).toDF("id", "text")
+      .withColumn("lang", lit("xx")) // a stale input lang is replaced
+    val out = Curation.gateStage(df, "id", "text", minTokens = 5,
+        maxDupLinePpm = 300000L)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getSeq[String](2)))
+    assert(out.toSeq === Seq((4L, "en", Seq(
+      "the report is in the attached file",
+      "mail <EMAIL> or call <PHONE>",
+      "the server at <IP> is down"))))
+  }
+
   test("host blocklist induction: threshold + floor, feeds the filter") {
     import spark.implicits._
     val rows =

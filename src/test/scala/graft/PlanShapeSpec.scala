@@ -2,6 +2,8 @@ package graft
 
 import graft.ops.{Curation, Retrieval}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpExtractAll, StringSplit}
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
@@ -322,6 +324,27 @@ class PlanShapeSpec extends AnyFunSuite {
       }
       assert(bcasts.nonEmpty, "template join must be broadcast")
     }
+  }
+
+  test("gateStage: each text kernel runs once per row, none in a Filter") {
+    // a Range source: over a LocalRelation the optimizer folds every
+    // projection into the local rows and no kernel is left to count
+    val scanned = spark.range(64).select(col("id").as("doc_id"),
+      concat(lit("the w"), col("id").cast("string")).as("text"))
+    val plan = Curation.gateStage(scanned, "doc_id", "text", minTokens = 2,
+      maxDupLinePpm = 300000L).queryExecution.optimizedPlan
+    def kernels(e: Expression): (Int, Int) =
+      (e.collect { case k: StringSplit => k }.size,
+        e.collect { case k: RegExpExtractAll => k }.size)
+    val (splits, extracts) = plan.flatMap(_.expressions.map(kernels))
+      .foldLeft((0, 0)) { case ((a, b), (c, d)) => (a + c, b + d) }
+    // tokens, lines, paragraphs; one match count per script range
+    assert(splits === 3, plan.toString)
+    assert(extracts === graft.ops.TextAnalysis.ScriptRanges.size,
+      plan.toString)
+    val inFilters = plan.collect { case f: Filter => kernels(f.condition) }
+    assert(inFilters.forall(_ == ((0, 0))),
+      s"text kernel re-inlined into a Filter: $plan")
   }
 
   test("c4Clean: zero shuffles — pure per-row line fold") {
