@@ -2,7 +2,6 @@ package graft
 
 import graft.gen.PagesGen
 import graft.pipeline.ExtractionPipeline
-import org.apache.spark.sql.SparkSession
 
 /** Single-measurement helper: run the extraction pipeline once at a given
   * parallelism in a FRESH JVM (invoked per-level so the two scaling
@@ -13,22 +12,7 @@ object BenchPipeline {
     val cpus = args(0).toInt
     val n = args(1).toLong
     val boost = if (args.length > 2) args(2).toInt else 1
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-pipe-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      // OFF: alias-substitution in constraint propagation goes
-      // exponential on deep multi-referenced text-feature projections
-      // (e.g. the curation gate) and we never benefit from inferred
-      // filters; see Curation.curate scaladoc
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.ops.SessionTuning(spark)
+    val spark = GraftSession.local(cpus)
     // warmup (JIT + codegen), then measured run
     ExtractionPipeline.records(PagesGen.pages(spark, 500, 7, cpus, boost),
       partitions = cpus).count()

@@ -9,20 +9,7 @@ object BenchQuery {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: BenchQuery <sfDir> <query>...")
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-query")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     args.drop(1).foreach { prefix =>
       val name = SparkEntry.queries.keys.find(_.startsWith(prefix))
         .getOrElse(sys.error(s"no query matches '$prefix'"))

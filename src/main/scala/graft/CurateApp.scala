@@ -2,7 +2,6 @@ package graft
 
 import graft.io.StagedJob
 import graft.ops.Curation
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** spark-submit entry point for the corpus-curation pipeline (the
@@ -57,21 +56,7 @@ object CurateApp {
     val idCol = opts.getOrElse("id", "doc_id")
     val textCol = opts.getOrElse("text", "text")
 
-    val spark = SparkSession.builder()
-      .config("spark.master",
-        sys.props.getOrElse("spark.master",
-          sys.env.getOrElse("SPARK_MASTER", "local[*]")))
-      .appName("graft-curate")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // OFF: alias-substitution in constraint propagation goes
-      // exponential on deep multi-referenced text-feature projections
-      // (e.g. the curation gate) and we never benefit from inferred
-      // filters; see Curation.curate scaladoc
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.ops.SessionTuning(spark)
+    val spark = GraftSession.submit("graft-curate")
 
     val (docs, idCol0, textCol0) =
       if (input.startsWith("pages:") || input.startsWith("warc:")) {
@@ -118,9 +103,7 @@ object CurateApp {
         (texts.toDF(), "doc_id", "text")
       } else (spark.read.parquet(input), idCol, textCol)
     val t0 = System.nanoTime()
-    // --span-scrub-n 8: corpus-level exact-substring scrub stage
-    // (single parse: the curateStaged call and the stage accounting
-    // below must agree on the stage names it implies).
+    // --span-scrub-n 8: corpus-level exact-substring scrub stage.
     // --sa-scrub-n 8: the suffix-array EXACT form of the same stage
     // (any-repeat semantics, no gram-hash space to saturate) — the
     // two are mutually exclusive spellings of stage 2b
@@ -384,25 +367,14 @@ object CurateApp {
     val sec = (System.nanoTime() - t0) / 1e9
 
     val in = docs.count()
-    // must mirror curateStaged's config-coded stage names exactly
-    val sfx = (if (spanScrubN > 0)
-        (if (scrubSa) s"_sa$spanScrubN" else s"_s$spanScrubN") else "") +
-      (if (maxRare >= 0) s"_f$maxRare" else "") +
-      freBand.map { case (lo, hi) => s"_r${lo}_$hi" }.getOrElse("")
-    val stageNames = Seq("1_gate", "2_deboil") ++
-      (if (spanScrubN > 0)
-        Seq(if (scrubSa) s"2b_sascrub$spanScrubN"
-          else s"2b_spanscrub$spanScrubN") else Nil) ++
-      (if (maxRare >= 0) Seq(s"2c_fluency$maxRare") else Nil) ++
-      freBand.map { case (lo, hi) => s"2d_read${lo}_$hi" }.toSeq ++
-      Seq(s"3_exact$sfx", s"4_neardup$sfx")
-    val stages = stageNames
+    val names = Curation.stageNames(spanScrubN, scrubSa, maxRare, freBand)
+    val stages = names.chain
       .map(s => s""""$s":${StagedJob.readRows(output, s).getOrElse(-1L)}""")
       .mkString("{", ",", "}")
     val leakJson =
       if (!auditLeakage) ""
       else {
-        val aud = spark.read.parquet(s"$output/stage_5_leakage$sfx")
+        val aud = spark.read.parquet(s"$output/stage_${names.leakage}")
         def leaks(scope: String): Long = aud
           .filter(col("scope") === scope && col("leaks"))
           .agg(coalesce(sum("n_pairs"), lit(0L))).collect()(0).getLong(0)

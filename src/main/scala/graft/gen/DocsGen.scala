@@ -84,11 +84,10 @@ object DocsGen {
   /** The planted-structure wrapper around a base body: promo docs
     * (did%17), exact-dup decade groups (did%10<2), near-dup pairs
     * (did%10∈{4,5}, one-token difference), a PII contact line, and
-    * shared boilerplate paragraphs. Shared by [[docs]] and the
-    * stage-timing profiler (BenchCurate) so both measure the same
-    * workload shape; q43's inline twin is the oracle-pinned spec.
+    * shared boilerplate paragraphs, wrapped around each [[docs]] body;
+    * q43's inline twin is the oracle-pinned spec.
     */
-  def plantedText(did: Column, base: Column): Column = {
+  private def plantedText(did: Column, base: Column): Column = {
     // floor() keeps the decade id integral (Column `/` is double
     // division; exact for ids below 2^52)
     val gt = concat(lit("g"), floor(did / 10L).cast("long").cast("string"))

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Idempotent, runtime-settable session tuning every entry point in
   * this repo applies (the catalog wraps it around each query —
-  * SparkEntry.tuneSession — and the operator-driving mains call it
-  * right after building their session).
+  * SparkEntry.tuneSession — and graft.GraftSession applies it to every
+  * session it builds).
   *
   * InferFiltersFromGenerate synthesizes `size(arr) > 0 AND
   * isnotnull(arr)` above every non-outer explode; filter pushdown then

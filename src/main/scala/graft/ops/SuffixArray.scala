@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /** Distributed suffix-array construction over the tokenized corpus —
   * the exact-substring machinery deferred since round 3: Manber &
   * Myers (SIAM J. Comput. 1993) prefix doubling, expressed as
-  * relational rounds (each round = one thin self-join + one dense
-  * re-rank), plus the LCP array recovered from the saved doubling
-  * tables — the standard binary-decomposition LCP walk. Together
+  * relational rounds (each round = one per-document `lead` window +
+  * one dense re-rank), plus the LCP array recovered from the saved
+  * doubling tables — the standard binary-decomposition LCP walk. Together
   * (sa_rank, lcp) give suffix-array-grade exact duplicated-substring
   * detection (Lee et al. 2022 "Deduplicating Training Data Makes
   * Language Models Better" builds on exactly this pair), closing the
@@ -123,10 +123,9 @@ object SuffixArray {
       // order by pos) — ONE exchange on id instead of the two the
       // (id, pos)/(id, pos−h) self-join paid, and the window partition
       // is document-bounded (≤ maxDocLen rows), never corpus-sized.
-      // The join form is kept for the (physically unreachable) case of
-      // a document longer than 2^31 tokens, where lead's int offset
-      // cannot express h.
-      if (dense && packable && 2 * h < maxLen && 2 * h <= Int.MaxValue) {
+      // lead's int offset always holds h: dl = size(tokens) ≤ 2^31 − 1
+      // and the loop runs only while h (and here 2h) < maxLen.
+      if (dense && packable && 2 * h < maxLen) {
         // FUSED quadrupling round — the composite h→2h packing and the
         // 2h→4h densify share ONE window exchange and ONE checkpoint:
         // `_p1 = _ra·(n+2) + lead(_ra,h) + 1` is exactly the composite
@@ -161,22 +160,12 @@ object SuffixArray {
         tables :+= (h -> r)
         dense = true
       } else {
-      val paired =
-        if (h <= Int.MaxValue) {
-          val wDoc = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("id")).orderBy(col("pos"))
-          r.select(col("id"), col("pos"), col("dl"),
-            col("rank").as("_ra"),
-            coalesce(lead(col("rank"), h.toInt).over(wDoc), lit(-1L))
-              .as("_rb"))
-        } else {
-          val shifted = r.select(col("id"), (col("pos") - h).as("pos"),
-            col("rank").as("_rb"))
-          r.join(shifted, Seq("id", "pos"), "left")
-            .select(col("id"), col("pos"), col("dl"),
-              col("rank").as("_ra"),
-              coalesce(col("_rb"), lit(-1L)).as("_rb"))
-        }
+      val wDoc = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("id")).orderBy(col("pos"))
+      val paired = r.select(col("id"), col("pos"), col("dl"),
+        col("rank").as("_ra"),
+        coalesce(lead(col("rank"), h.toInt).over(wDoc), lit(-1L))
+          .as("_rb"))
       if (dense && packable) {
         r = paired.select(col("id"), col("pos"), col("dl"),
           (col("_ra") * (n + 2L) + col("_rb") + 1L).as("rank"))

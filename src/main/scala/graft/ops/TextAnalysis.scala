@@ -429,17 +429,6 @@ object TextAnalysis {
   def fingerprint(text: Column): Column =
     md5(regexp_replace(lower(trim(text)), "\\s+", " "))
 
-  /** Winnowing-style robust fingerprint: min token-shingle hash per
-    * window — here simplified to the k smallest shingle hashes joined.
-    */
-  def shingleSketch(text: Column, n: Int = 3, k: Int = 4): Column = {
-    val toks = Dedup.tokens(text)
-    val shingles = transform(
-      sequence(lit(0), greatest(size(toks) - n, lit(0))),
-      i => Dedup.tokHash(array_join(slice(toks, i + 1, lit(n)), " ")))
-    array_join(slice(array_sort(array_distinct(shingles)), 1, k), "-")
-  }
-
   /** Term-lexicon gate statistics — banned-word / policy-phrase
     * counting over a document in ONE pass via the native Aho-Corasick
     * kernel ([[graft.functions.AhoCorasickStats]]; the per-term

@@ -5,7 +5,7 @@ import graft.pipeline.ExtractionPipeline
 import graft.rules.{RuleSet, RuleSets}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 /** Structured Streaming surface. The reference is pure batch
   * (/root/reference/soa_extractor/run.py:149 — a file loop), but the
@@ -542,13 +542,5 @@ object StreamingPipeline {
           .otherwise(lit(0L)).cast("long").as("rare_bigram_ppm"),
         when(col("n_bigrams") > 0, expr("_sp DIV n_bigrams"))
           .otherwise(lit(0L)).cast("long").as("fluency_ppm"))
-  }
-
-  /** Convenience: run a streaming query to completion over a bounded
-    * source (test/demo helper).
-    */
-  def runToCompletion(q: StreamingQuery): Unit = {
-    q.processAllAvailable()
-    q.stop()
   }
 }

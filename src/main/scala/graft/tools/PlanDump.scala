@@ -1,12 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for a list of queries to files:
   *   runMain graft.tools.PlanDump <outDir> <suffix> q95 q101 ...
-  * writes <outDir>/<query>_<suffix>.txt for each query. Session config
-  * mirrors Bench (shuffle partitions aside — plan shape, not timing,
-  * is what these files pin).
+  * writes <outDir>/<query>_<suffix>.txt for each query, planned in the
+  * [[graft.GraftSession.local]] session (Bench's conf).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -15,17 +12,7 @@ object PlanDump {
     val suffix = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
     args.drop(2).foreach { prefix =>
       val name = graft.SparkEntry.queries.keys.toSeq.sorted

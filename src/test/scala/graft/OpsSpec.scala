@@ -37,6 +37,31 @@ class OpsSpec extends AnyFunSuite {
     assert(!pairs.exists(p => p._1 == 2L || p._2 == 2L))
   }
 
+  test("capBuckets == the count-over-window cap (one hot bucket)") {
+    import org.apache.spark.sql.expressions.Window
+    val maxBucket = 10
+    // half the rows in one (band, bucket) per band, the rest spread over
+    // 300 buckets per band whose sizes straddle the cap
+    val banded = spark.range(0, 8000, 1, 8)
+      .select(col("id"), pmod(col("id"), lit(4)).cast("int").as("band"),
+        when(pmod(col("id"), lit(10)) < 5, lit("HOT"))
+          .otherwise(concat(lit("b"),
+            pmod(xxhash64(col("id")), lit(300)).cast("string")))
+          .as("bucket"))
+    def ids(df: DataFrame): Set[Long] =
+      df.select("id").collect().map(_.getLong(0)).toSet
+    val ref = ids(banded
+      .withColumn("_bsz",
+        count(lit(1)).over(Window.partitionBy(col("band"), col("bucket"))))
+      .filter(col("_bsz") <= maxBucket))
+    val kept = ids(Dedup.capBuckets(banded, maxBucket))
+    assert(kept === ref)
+    // the hot buckets go, and so does at least one small bucket over the cap
+    val small = (0L until 8000L).filter(_ % 10 >= 5)
+    assert(kept.nonEmpty && kept.subsetOf(small.toSet))
+    assert(kept.size < small.size)
+  }
+
   test("minhash LSH big-bucket cap: skips oversized buckets, reports them") {
     import spark.implicits._
     // 6 identical docs share every bucket (size 6) + one distinct doc
@@ -1340,6 +1365,39 @@ class OpsSpec extends AnyFunSuite {
       "lang", "n_toks", budgets, defaultBudget = 100L).collect()
     assert(again.map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq ===
       out.map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq)
+  }
+
+  test("tokenBudgetAssign == one running-sum window per stratum (90%-hot)") {
+    import org.apache.spark.sql.expressions.Window
+    val rows = 4000L
+    val docs = spark.range(0, rows, 1, 8)
+      .select(col("id"),
+        when(pmod(col("id"), lit(10)) < 9, lit("en"))
+          .otherwise(lit("de")).as("lang"),
+        (pmod(col("id") * 2654435761L, lit(200)) + 10L).as("n_toks"))
+    val budgets = Map("en" -> rows * 20L, "de" -> rows * 2L)
+    // reference: the whole stratum in one window partition, ordered by
+    // md5(id:budget) then id
+    val w = Window.partitionBy(col("lang"))
+      .orderBy(md5(concat(col("id").cast("string"), lit(":budget"))),
+        col("id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val budgetCol = when(col("lang") === "en", lit(budgets("en")))
+      .otherwise(lit(budgets("de")))
+    def ids(df: DataFrame): Set[Long] =
+      df.select("id").collect().map(_.getLong(0)).toSet
+    val ref = ids(docs
+      .withColumn("_cum", sum(col("n_toks")).over(w))
+      .filter(col("_cum") - col("n_toks") < budgetCol))
+    val kept = ids(Curation.tokenBudgetAssign(docs, "id", "lang", "n_toks",
+      budgets).filter(col("kept")))
+    assert(kept === ref)
+    // both strata are cut, neither kept whole nor emptied
+    Seq(0L -> 9L, 9L -> 10L).foreach { case (lo, hi) =>
+      val stratum = (0L until rows).filter(i => i % 10 >= lo && i % 10 < hi)
+      val n = stratum.count(kept)
+      assert(n > 0 && n < stratum.size)
+    }
   }
 
   test("temperatureResample: minority strata upweighted, p capped, stable") {

@@ -206,6 +206,34 @@ class ResumeSpec extends AnyFunSuite {
     assert(sa.forall(!_.contains(planted)))
   }
 
+  test("staged curation: stageNames names every stage a configured run commits") {
+    import spark.implicits._
+    val docs = (0L until 60L).map { i =>
+      (i, s"the document $i is about the topic ${i % 13} with words " +
+        s"alpha$i beta gamma delta epsilon zeta eta theta")
+    }.toDF("id", "text")
+    val dir = Files.createTempDirectory("graft_cur_names").toString
+    val band = Some((-1000000000L, 1000000000L))
+    val names = graft.ops.Curation.stageNames(spanScrubN = 8,
+      spanScrubSa = false, maxRareBigramPpm = 1000000L, freBandMilli = band)
+    // byte-identical to the names committed output dirs already carry
+    val sfx = "_s8_f1000000_r-1000000000_1000000000"
+    assert(names.chain === Seq("1_gate", "2_deboil", "2b_spanscrub8",
+      "2c_fluency1000000", "2d_read-1000000000_1000000000",
+      s"3_exact$sfx", s"4_neardup$sfx"))
+    val out = graft.ops.Curation.curateStaged(docs, "id", "text", dir,
+      minTokens = 5, paraMinDocs = 3, spanScrubN = 8,
+      auditSplits = Some(Seq("train" -> 8, "val" -> 1, "test" -> 1)),
+      maxRareBigramPpm = 1000000L, freBandMilli = band)
+    val committed = new java.io.File(dir).listFiles().toSeq
+      .filter(d => new java.io.File(d, "_COMMITTED").exists())
+      .map(_.getName.stripPrefix("stage_")).toSet
+    assert(committed ===
+      (names.chain ++ Seq(names.pairs, names.leakage)).toSet)
+    assert(graft.io.StagedJob.readRows(dir, names.neardup)
+      .contains(out.count()))
+  }
+
   test("staged curation: a stage committed by an older format is recomputed") {
     import spark.implicits._
     val docs = (0L until 40L)
